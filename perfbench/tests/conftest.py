@@ -1,0 +1,10 @@
+"""The benchmark's own tests: ``python -m pytest perfbench/tests``."""
+
+from __future__ import annotations
+
+import sys
+from pathlib import Path
+
+HERE = Path(__file__).resolve().parent
+sys.path.insert(0, str(HERE.parent))
+sys.path.insert(0, str(HERE.parent.parent))
